@@ -228,3 +228,62 @@ def test_navigator_over_incrementally_maintained_view(spark, tmp_path):
         F.count("amount").cast("bigint").alias("n_amount"),
     )
     assert _rows(got) == _rows(expect)
+
+
+# --- choose: view selection from metadata alone -------------------------------
+
+
+def _unresolvable(name):
+    raise AssertionError(f"choose must not resolve a view (asked for {name!r})")
+
+
+CHOOSE_VIEWS = [
+    ViewDef("g_fine", ("user_id", "event_type"), ("v",), ("v",)),
+    ViewDef("g_user", ("user_id",), ("v",)),
+]
+
+
+def test_choose_picks_the_coarsest_matching_view():
+    nav = AggNavigator(_unresolvable, CHOOSE_VIEWS)
+    assert nav.choose(["user_id"], AGGS) == CHOOSE_VIEWS[1]
+    assert nav.choose(["user_id", "event_type"], AGGS) == CHOOSE_VIEWS[0]
+    # a filter column outside g_user's keys routes to the finer view
+    assert (
+        nav.choose(
+            ["user_id"],
+            AGGS,
+            filter=F.col("event_type") == "a",
+            filter_cols=["event_type"],
+        )
+        == CHOOSE_VIEWS[0]
+    )
+    # ties on grain break by table name
+    tied = [ViewDef("g_b", ("user_id",), ("v",)), ViewDef("g_a", ("user_id",), ("v",))]
+    assert AggNavigator(_unresolvable, tied).choose(["user_id"], AGGS).table == "g_a"
+
+
+def test_choose_rejects_filters_it_cannot_prove_safe():
+    nav = AggNavigator(_unresolvable, CHOOSE_VIEWS)
+    with pytest.raises(ValueError, match="filter_cols"):
+        nav.choose(["user_id"], AGGS, filter=F.col("event_type") == "a")
+    with pytest.raises(NoMatchingView, match="no view answers"):
+        nav.choose(
+            ["user_id"], AGGS, filter=F.col("v") > 5, filter_cols=["v"]
+        )
+
+
+def test_choose_needs_a_minmax_view_for_extrema():
+    nav = AggNavigator(_unresolvable, CHOOSE_VIEWS[1:])
+    with pytest.raises(NoMatchingView, match="no view answers"):
+        nav.choose(["user_id"], {"m": ("max", "v")})
+    # the minmax-maintaining view answers it even at a finer grain
+    nav = AggNavigator(_unresolvable, CHOOSE_VIEWS)
+    assert nav.choose(["user_id"], {"m": ("max", "v")}) == CHOOSE_VIEWS[0]
+
+
+def test_choose_rejects_unsupported_aggregates():
+    nav = AggNavigator(_unresolvable, CHOOSE_VIEWS)
+    with pytest.raises(NoMatchingView, match="not derivable"):
+        nav.choose(["user_id"], {"p": ("percentile", "v")})
+    with pytest.raises(ValueError, match="count_rows takes no column"):
+        nav.choose(["user_id"], {"n": ("count_rows", "v")})

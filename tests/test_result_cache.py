@@ -173,3 +173,30 @@ def test_mid_compute_publish_withdraws_entry(spark, pipe):
     # the racy entry must NOT serve: recompute against the restored gen
     assert prov2 == "miss" and len(calls) == 2
     assert dict((g, s) for g, s in r2.collect()) == {"a": 30, "b": 5}
+
+
+def test_hit_reads_the_generation_it_checked(spark, pipe, monkeypatch):
+    """A concurrent miss that republishes the entry after the hit checked
+    its commit record must not change what the hit reads: the hit serves
+    the generation whose fingerprint it checked."""
+    from zeta_etl_spark.plans import result_cache
+
+    calls = []
+    r1, _ = cached_result(spark, pipe, "pin", ["base"], _agg(spark, pipe, calls))
+    want = _rows(r1)
+    checked = result_cache._commit_meta
+
+    def check_then_republish(pl, name, version):
+        meta = checked(pl, name, version)
+        pl._write_overwrite_atomic(
+            pl.nodes[name],
+            spark.createDataFrame([("z", 0)], "g string, sv bigint"),
+            commit_extra={k: meta[k] for k in ("rc_fingerprint", "rc_schema")},
+        )
+        return meta
+
+    monkeypatch.setattr(result_cache, "_commit_meta", check_then_republish)
+    r2, prov = cached_result(spark, pipe, "pin", ["base"], _agg(spark, pipe, calls))
+    monkeypatch.undo()
+    assert prov == "hit" and len(calls) == 1
+    assert _rows(r2) == want

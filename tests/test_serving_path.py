@@ -289,3 +289,97 @@ def test_streaming_and_snapshot_ingest_do_not_mix(spark, tmp_path):
     sp2.ingest(spark.createDataFrame(V1, SCHEMA))
     with pytest.raises(RuntimeError, match="snapshot-ingested"):
         _drain(spark, sp2, src, str(tmp_path / "ckpt2"))
+
+
+# --- read-path order: view choice → cache check → rollup only on a miss -----
+
+
+def _count_resolves(sp):
+    calls = []
+    resolve = sp._navigator._resolve
+
+    def counting(name):
+        calls.append(name)
+        return resolve(name)
+
+    sp._navigator._resolve = counting
+    return calls
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return its result and the ids of
+    the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hit_never_resolves_the_view_and_collects_in_one_job(spark, sp):
+    calls = _count_resolves(sp)
+    r, prov = sp.request(["day"], AGGS)
+    assert prov == "cache-miss+view:mv_day"
+    assert calls == ["mv_day"]  # the miss reads the view inside compute
+    want = _rows(r)
+
+    (r2, prov2), request_jobs = _jobs(
+        spark, "rc-hit-request", lambda: sp.request(["day"], AGGS)
+    )
+    assert prov2 == "cache-hit+view:mv_day"
+    assert calls == ["mv_day"], "a hit must not touch the view resolver"
+    assert request_jobs == [], "a hit must plan without running a job"
+    rows, collect_jobs = _jobs(spark, "rc-hit-collect", r2.collect)
+    assert len(collect_jobs) == 1, collect_jobs
+    assert sorted(tuple(x) for x in rows) == want
+
+
+def test_unanswerable_request_fails_before_any_job_or_entry(spark, sp):
+    import os
+
+    from zeta_etl_spark.plans.navigator import NoMatchingView
+
+    calls = _count_resolves(sp)
+    with pytest.raises(NoMatchingView):
+        # no view is keyed by event_id
+        _jobs(spark, "rc-no-view", lambda: sp.request(["event_id"], AGGS))
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("rc-no-view")
+    assert list(jobs) == []
+    assert calls == []
+    assert not [
+        e for e in os.listdir(sp.pipeline.base_path) if e.startswith("__rc_")
+    ]
+
+
+def test_sync_between_resolve_and_fingerprint_is_never_served_stale(
+    spark, sp
+):
+    """A sync that publishes while a miss is computing must not leave the
+    old generation's result stored under the new fingerprint: the view is
+    resolved inside ``compute`` — after the fingerprint — so the cache's
+    bracket check withdraws the entry and the next request recomputes."""
+    resolve = sp._navigator._resolve
+    fired = []
+
+    def resolve_then_publish(name):
+        df = resolve(name)  # binds the current view generation
+        if not fired:
+            fired.append(name)
+            sp.ingest(_v2(spark))
+            sp.sync()
+        return df
+
+    sp._navigator._resolve = resolve_then_publish
+    sp.request(["day"], AGGS)
+    assert fired == ["mv_day"]
+    want = _rows(_direct(_v2(spark), ["day"]))
+    assert want == [(1, 3, 150, 2), (2, 1, 35, 1), (3, 2, 510, 2)]
+    r, prov = sp.request(["day"], AGGS)
+    assert _rows(r) == want
+    assert prov == "cache-miss+view:mv_day"
+    r, prov = sp.request(["day"], AGGS)
+    assert prov == "cache-hit+view:mv_day"
+    assert _rows(r) == want

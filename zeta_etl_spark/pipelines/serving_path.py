@@ -25,12 +25,17 @@ The serving contract
   exactly-once under crashes, cost ∝ change volume.
 - ``request(keys, aggs, ...)`` is the dashboard read:
 
-    1. the navigator proves which materialized view can answer and
-       builds the O(|view|) rollup plan — base data is never scanned;
-    2. the result cache serves a stored result when the chosen view
-       still serves the generation the result was computed from —
+    1. the navigator proves which materialized view can answer from
+       the registered view metadata alone (``AggNavigator.choose``) —
+       no view is read, no Spark job runs;
+    2. the result cache fingerprints that view's current generation and
+       serves a stored result computed from the same generation —
        repeated dashboards cost one pointer resolve + a scan of the
-       RESULT parquet (thousands of rows).
+       RESULT parquet (thousands of rows);
+    3. only on a miss is the view read and the O(|view|) rollup plan
+       built (``AggNavigator.answer``) — base data is never scanned.
+       The read happens after the fingerprint, so the cache's bracket
+       check catches a sync that publishes mid-compute.
 
   Provenance strings (``cache-hit+view:mv_hourly`` /
   ``cache-miss+view:mv_hourly``) and the ``stats`` counters make the
@@ -243,7 +248,8 @@ class ServingPath:
         filter_cols: Sequence[str] = (),
         filter_slug: str | None = None,
     ) -> tuple[DataFrame, str]:
-        """Dashboard read: navigator rewrite + result cache.
+        """Dashboard read: view choice, result cache, and on a miss the
+        navigator rewrite.
 
         Returns ``(result, provenance)`` with provenance
         ``cache-{hit|miss}+view:<name>``.  A ``filter`` needs
@@ -260,23 +266,24 @@ class ServingPath:
                 "a filtered request needs filter_slug — the predicate "
                 "is part of the cache identity"
             )
-        df, view_prov = self._navigator.answer(
+        view = self._navigator.choose(
             keys, aggs, filter=filter, filter_cols=filter_cols
         )
-        view_name = view_prov.split(":", 1)[1]
         key = self._cache_key(keys, aggs, filter_slug, filter_cols)
         result, prov = cached_result(
             self.spark,
             self.pipeline,
             key,
-            inputs=[view_name],
-            compute=lambda: df,
+            inputs=[view.table],
+            compute=lambda: self._navigator.answer(
+                keys, aggs, filter=filter, filter_cols=filter_cols
+            )[0],
         )
         if prov == "hit":
             self.stats.hits += 1
         else:
             self.stats.misses += 1
-        return result, f"cache-{prov}+{view_prov}"
+        return result, f"cache-{prov}+view:{view.table}"
 
     # -- internals ----------------------------------------------------------
 

@@ -1509,9 +1509,7 @@ class Pipeline:
                 f"disk (available: {gens}); it predates the "
                 f"retain_generations={self.retain_generations} window"
             )
-        return spark.read.parquet(
-            os.path.join(self.path(name) + "__gen", f"v{version:06d}")
-        )
+        return spark.read.parquet(self.generation_dir(name, version))
 
     def read_as_of(
         self, spark: SparkSession, name: str, timestamp: str
@@ -1736,9 +1734,7 @@ class Pipeline:
                 f"declares partition_by={tuple(self.nodes[dst].partition_by)}"
                 f" but the cloned generation's layout is {src_layout}"
             )
-        src_gen = os.path.join(
-            self.path(src) + "__gen", f"v{version:06d}"
-        )
+        src_gen = self.generation_dir(src, version)
         dst_path = self.path(dst)
         gen_root, _ = self._gen_prepare(dst_path)
         with self._staging(gen_root) as staged:
@@ -2002,6 +1998,11 @@ class Pipeline:
             return {}
         return self.commit_meta_at(name, ver)
 
+    def generation_dir(self, name: str, version: int) -> str:
+        """Directory of one sealed generation of an overwrite table — the
+        target the live pointer resolves to while it serves ``version``."""
+        return os.path.join(self.path(name) + "__gen", f"v{version:06d}")
+
     def commit_meta_at(self, name: str, version: int) -> dict:
         """Commit record of an explicit generation (empty dict when the
         generation has no readable ``_commit.json``).  This is the ONE
@@ -2010,9 +2011,7 @@ class Pipeline:
         copies of the generation-resolution logic)."""
         import json as _json
 
-        p = os.path.join(
-            self.path(name) + "__gen", f"v{version:06d}", "_commit.json"
-        )
+        p = os.path.join(self.generation_dir(name, version), "_commit.json")
         if not os.path.exists(p):
             return {}
         with open(p) as fh:

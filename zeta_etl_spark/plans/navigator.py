@@ -162,17 +162,17 @@ class AggNavigator:
         self._resolve = resolve
         self._views = list(views)
 
-    def answer(
+    def choose(
         self,
         keys: Sequence[str],
         aggs: Mapping[str, tuple[str, str | None]],
         filter: Column | None = None,
         filter_cols: Sequence[str] = (),
-    ) -> tuple[DataFrame, str]:
-        """Return ``(result, provenance)`` where provenance names the view
-        used — callers (and tests) can assert the rewrite actually hit a
-        materialization.  ``filter`` must reference only ``filter_cols``,
-        all of which must be view key columns; raises
+    ) -> ViewDef:
+        """Pick the view that answers the request from the registered
+        metadata alone — the resolver is never called, so no view is read
+        and no Spark job runs.  ``filter`` must reference only
+        ``filter_cols``, all of which must be view key columns; raises
         :class:`NoMatchingView` when no registered view qualifies.
         """
         _check_request(aggs)
@@ -190,7 +190,21 @@ class AggNavigator:
                 f"aggs={dict(aggs)} filter_cols={list(filter_cols)}; "
                 f"registered: {[ (v.table, list(v.keys)) for v in self._views ]}"
             )
-        best = min(matches, key=lambda v: (len(v.keys), v.table))
+        return min(matches, key=lambda v: (len(v.keys), v.table))
+
+    def answer(
+        self,
+        keys: Sequence[str],
+        aggs: Mapping[str, tuple[str, str | None]],
+        filter: Column | None = None,
+        filter_cols: Sequence[str] = (),
+    ) -> tuple[DataFrame, str]:
+        """Return ``(result, provenance)`` where provenance names the view
+        used — callers (and tests) can assert the rewrite actually hit a
+        materialization.  The view is the one :meth:`choose` picks; only
+        then is it resolved and the rollup plan built over it.
+        """
+        best = self.choose(keys, aggs, filter=filter, filter_cols=filter_cols)
         out = rollup_from_view(
             self._resolve(best.table), keys, aggs, filter=filter
         )

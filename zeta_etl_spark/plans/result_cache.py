@@ -64,6 +64,14 @@ def cached_result(
     ``inputs`` must name EVERY pipeline table the compute reads —
     an omitted input makes staleness undetectable for changes to it
     (same contract as any derived-table declaration in this engine).
+
+    ``compute`` must resolve its inputs when it is CALLED, not before:
+    the fingerprint is taken first and the race guard below brackets
+    only what happens after it.  A frame bound before the call (e.g.
+    ``df = read(...); compute=lambda: df``) pins a generation the
+    fingerprint never saw — a publish in between would store the old
+    generation's result under the new fingerprint, served as a hit until
+    the next publish.
     """
     if not inputs:
         raise ValueError(
@@ -85,19 +93,24 @@ def cached_result(
         # a full-DAG pipeline.run() must skip this sentinel, not crash on it
         pipeline.nodes[name].extra["external_writer"] = True
 
-    def _read(schema_json: str) -> DataFrame:
+    def _read(gen_dir: str, schema_json: str) -> DataFrame:
         # read with the RECORDED schema: a legitimately empty result writes
         # a generation with no part files, where schema inference fails —
         # without this, one empty result would brick its key (the hit path
         # would crash on every later call)
         return spark.read.schema(StructType.fromJson(schema_json)).parquet(
-            os.path.realpath(pipeline.path(name))
+            gen_dir
         )
 
     if os.path.lexists(pipeline.path(name)):
-        meta = _commit_meta(pipeline, name, _current_version(pipeline, name))
+        version = _current_version(pipeline, name)
+        meta = _commit_meta(pipeline, name, version)
         if meta.get("rc_fingerprint") == fp and "rc_schema" in meta:
-            return _read(meta["rc_schema"]), "hit"
+            # read the generation whose commit record was just checked: a
+            # second pointer resolve could land on one a concurrent miss
+            # republished since, whose files were never checked
+            gen_dir = pipeline.generation_dir(name, version)
+            return _read(gen_dir, meta["rc_schema"]), "hit"
     df = compute()
     schema_json = df.schema.jsonValue()
     pipeline._write_overwrite_atomic(
@@ -105,7 +118,8 @@ def cached_result(
         df,
         commit_extra={"rc_fingerprint": fp, "rc_schema": schema_json},
     )
-    out = _read(schema_json)  # binds the concrete generation dir now
+    # binds the concrete generation dir now
+    out = _read(os.path.realpath(pipeline.path(name)), schema_json)
     # RACE GUARD (ADVICE r8): compute() is lazy — its input scans resolve
     # generation pointers while the write above runs.  If an input
     # published mid-compute, the stored result may belong to the NEWER
